@@ -210,7 +210,7 @@ object Candidates {
   }
 
   /** SimHash bit-block candidate pairs, verified to Hamming <= sigma with
-    * the span prefilter and optional same/diff-group modes
+    * the span prefilter and the optional diff-group mode
     * (/root/reference/SimHasher.cpp:91-122) in the join output filter.
     *
     * Pair-list contract: with `expandPairs = false` (pipeline default) the
@@ -221,7 +221,7 @@ object Candidates {
     * see [[expandThroughStar]]).
     */
   def simhashPairs(fps: Dataset[FingerprintRow], cfg: GraftConfig, sigma: Int,
-                   onlyDiffGroup: Boolean = false, onlySameGroup: Boolean = false,
+                   onlyDiffGroup: Boolean = false,
                    expandPairs: Boolean = false): DataFrame = {
     if (sigma < 0) { // sigma_normal = -1 matches nothing (dif_config.txt:3)
       val spark = fps.sparkSession
@@ -231,17 +231,16 @@ object Candidates {
           org.apache.spark.sql.types.StructField("b", org.apache.spark.sql.types.StringType))))
     } else {
       // collapse rows with identical (simhash, span, group) — d=0 and
-      // span-compatible by construction — unless a group compare mode needs
+      // span-compatible by construction — unless the diff-group mode needs
       // per-row group checks. Project to the five columns this pass reads
       // BEFORE the collapse: the groupBy+join-back shuffles every row, and
       // the full fingerprint row is ~1 KB (minhash + gram arrays +
       // caption_norm) vs ~50 B for the simhash columns — a 20x shuffle-byte
       // cut on the heaviest all-rows exchange of the pipeline.
-      val groupMode = onlyDiffGroup || onlySameGroup
       val narrow = fps.toDF().select(
         col("image_id"), col("simhash"), col("simhash_lo"), col("span"), col("group"))
       val (base, star) =
-        if (groupMode) (narrow, None)
+        if (onlyDiffGroup) (narrow, None)
         else {
           val (r, s) = collapseExact(narrow,
             Seq("simhash", "simhash_lo", "span", "group"))
@@ -250,9 +249,7 @@ object Candidates {
       val keyed = blockView(base, cfg)
       val raw = bucketSelfJoin(keyed, Seq("blockIdx", "blockVal"), cfg.hotBucketCap)
       val groupCond: Column =
-        if (onlyDiffGroup) col("l_group") =!= col("r_group")
-        else if (onlySameGroup) col("l_group") === col("r_group")
-        else lit(true)
+        if (onlyDiffGroup) col("l_group") =!= col("r_group") else lit(true)
       val joined = raw
         .filter(
           hammingCol(cfg) <= lit(sigma) &&

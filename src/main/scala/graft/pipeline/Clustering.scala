@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftFrames}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Iterative Dataset-based connected components (hash-partitioned min-label
   * propagation) — the scalable replacement for the reference's in-memory
@@ -26,52 +27,18 @@ import org.apache.spark.sql.functions._
   */
 object Clustering {
 
-  /** @param labels    (image_id, cluster_id: string = min member image_id)
+  /** @param labels    (image_id, cluster_id: string = min member image_id);
+    *                  lazy — its plan reads the `blocks` below
     * @param iterations rounds run
     * @param converged  false iff maxIter was hit with labels still changing —
     *                   the component partition may then be SPLIT (never
     *                   over-merged); callers must surface this.
+    * @param blocks     persisted-RDD ids backing `labels` (the id dictionary
+    *                   and the final label batch): the caller frees them with
+    *                   [[Blocks.free]] once it has materialized the labels
     */
-  final case class CCResult(labels: DataFrame, iterations: Int, converged: Boolean)
-
-  /** Eager materialization + lineage truncation. Prefers a RELIABLE
-    * checkpoint (HDFS/object-store) when `sparkContext.setCheckpointDir` is
-    * configured — on a real cluster localCheckpoint blocks live on executors
-    * and an executor loss kills the job mid-stage; local mode (no checkpoint
-    * dir) falls back to localCheckpoint.
-    */
-  private def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(true)
-
-  /** Materialize + report which persisted-RDD ids the call created, so the
-    * CC loop can free a batch's blocks once the next batch supersedes it.
-    * (Reliable `checkpoint` writes files instead of blocks — the looked-up
-    * id is then not in getPersistentRDDs and the unpersist is a no-op; file
-    * cleanup is the context cleaner's job.) Without this, every batch's
-    * blocks live until the session ends: repeated CC runs in one session
-    * accumulate them and GC-thrash the JVM (measured 5x wall blow-up on
-    * back-to-back runs).
-    *
-    * Ids are read from the materialized frame's own `LogicalRDD` plan leaf
-    * (the exact RDD `Dataset.localCheckpoint` persisted) — not from a
-    * before/after snapshot of `getPersistentRDDs`, which attributes ANY
-    * concurrently-persisted RDD to this call and would free another
-    * thread's live (non-recomputable) checkpoint blocks; round 6 runs
-    * independent CC tiers concurrently (guide §2.6).
-    */
-  private def materializeTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-    val out = materialize(df)
-    val ids = out.queryExecution.logical.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }.toSet
-    (out, ids)
-  }
-
-  private def unpersistIds(df: DataFrame, ids: Set[Int]): Unit = {
-    val persisted = df.sparkSession.sparkContext.getPersistentRDDs
-    ids.foreach(id => persisted.get(id).foreach(_.unpersist(false)))
-  }
+  final case class CCResult(labels: DataFrame, iterations: Int, converged: Boolean,
+                            blocks: Set[Int])
 
   /** @param edges  (a, b) string-id pairs, each pair once in either order
     * @param vertices single-column "image_id" frame of ALL rows to label
@@ -79,200 +46,203 @@ object Clustering {
     */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
                           maxIter: Int = 30): CCResult = {
-    // Dense-long label space (round-6; round-5 JFR named UTF8String
-    // materialization in these joins as the top remaining allocation site,
-    // and allocation churn is the box's measured multi-thread contention
-    // driver — BENCH.md §hardware). Edge-incident ids are dictionary-encoded
-    // ONCE into compact longs; every per-round join/aggregation then moves
-    // (bigint, bigint) rows instead of string pairs.
-    //
-    // The rid is the id's RANK in string order (sort + zipWithIndex,
-    // materialized through the checkpoint seam so the assignment is stable
-    // across subtree re-executions — `monotonically_increasing_id` alone is
-    // neither stable nor usable here). ORDER-PRESERVING encoding is
-    // load-bearing twice over: (1) min-rid ≡ min-string-id, so decoded
-    // labels are bit-identical to the string implementation
-    // (CCConvergenceSpec pins cluster_id = min member id); (2) the loop's
-    // state trajectory is comparison-only, so rank encoding makes every
-    // batch isomorphic to the string run — same batch count, same probe
-    // behavior. (A scrambled assignment was measured to break the
-    // pointer-jump acceleration on long chains: a 300-vertex path needed
-    // O(diameter) batches instead of O(log), and each batch's checkpoint
-    // re-inherits the plan's estimated sizeInBytes, whose ~200-leaf product
-    // then COMPOUNDS per batch into million-bit BigInts that stall the
-    // optimizer's stats visitor — driver-side, before any task runs.)
-    val sparkEdges = edges.sparkSession
-    val dict = {
-      import sparkEdges.implicits._
-      val sortedIds = edges.select(col("a").as("id"))
-        .unionByName(edges.select(col("b").as("id")))
-        .distinct()
-        .orderBy("id")
-        .as[String].rdd.zipWithIndex()
-      materializeTracked(sortedIds.toDF("id", "rid"))._1
-    }
-
-    // Lineage discipline (plan-explosion gotcha): the pointer-jump step
-    // SELF-JOINS each round's frame, so an un-truncated logical plan doubles
-    // per round (2^rounds); and `sym` is re-referenced every round. Both are
-    // therefore materialized eagerly — the plan each round is then two scans,
-    // constant-size, regardless of round count. (Data-wise these frames are
-    // edge-incident rows only — tiny next to the corpus.)
-    val longEdges = edges
-      .join(dict.select(col("id").as("a"), col("rid").as("ra")), Seq("a"))
-      .join(dict.select(col("id").as("b"), col("rid").as("rb")), Seq("b"))
-      .select(col("ra"), col("rb"))
-    val (sym, symIds) = materializeTracked(
-      longEdges.select(col("ra").as("src"), col("rb").as("dst"))
-        .unionByName(longEdges.select(col("rb").as("src"), col("ra").as("dst")))
-        .repartition(col("src")))
-
-    // Round-6 floor cut: with AQE on, EVERY exchange in a batch is its own
-    // query-stage job with driver/replan turnaround — ~15 stage-jobs per
-    // batch of tiny checkpoint-backed CC frames, pure serial-floor latency
-    // that does not shrink with cores. The loop therefore runs in a CHILD
-    // session (same SparkContext, own SQLConf — no conf set/restore races
-    // with concurrently-running tier CCs) with AQE off, so one batch is ONE
-    // job with all its stages pipelined by the DAG scheduler. What AQE was
-    // providing the loop is replaced explicitly: (a) runtime partition
-    // coalescing → a static shuffle width derived from the materialized
-    // sym's OWN partition count (AQE already coalesced that exchange to a
-    // data-proportional width; floored for multi-core parallelism) —
-    // scale-adaptive, not a tuned constant; (b) dynamic broadcast — not
-    // applicable: the loop's joins are label-frame ⋈ label-frame/sym, both
-    // sides checkpoint-backed with only product-inflated inherited size
-    // estimates, so AQE never broadcast them here anyway (and at scale they
-    // are not broadcastable). The candidate generators and everything else
-    // keep AQE (fully off was measured 3x worse in round 5 — dynamic
-    // broadcasts there are load-bearing). GRAFT_CC_LOOP_AQE=1 reverts to
-    // the in-session AQE loop.
-    val loopSession =
-      if (sys.env.contains("GRAFT_CC_LOOP_AQE")) None
-      else {
-        val s = edges.sparkSession.newSession()
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        s.conf.set("spark.sql.shuffle.partitions", math.max(
-          sym.rdd.getNumPartitions,
-          math.min(16, edges.sparkSession.sparkContext.defaultParallelism)).toString)
-        Some(s)
+    requireStringIds(vertices, "vertex", "image_id")
+    requireStringIds(edges, "edge", "a", "b")
+    val spark = edges.sparkSession
+    // blocks made here: `kept` backs the returned labels (dict + the current
+    // batch), `symIds` only the loop. Superseded batches are freed as the
+    // loop goes; on failure `kept` is freed too.
+    var kept = Set.empty[Int]
+    var symIds = Set.empty[Int]
+    try {
+      // Dense-long label space (round-6; round-5 JFR named UTF8String
+      // materialization in these joins as the top remaining allocation site,
+      // and allocation churn is the box's measured multi-thread contention
+      // driver — BENCH.md §hardware). Edge-incident ids are dictionary-encoded
+      // ONCE into compact longs; every per-round join/aggregation then moves
+      // (bigint, bigint) rows instead of string pairs.
+      //
+      // The rid is the id's RANK in string order (sort + zipWithIndex,
+      // materialized through the checkpoint seam so the assignment is stable
+      // across subtree re-executions — `monotonically_increasing_id` alone is
+      // neither stable nor usable here). ORDER-PRESERVING encoding is
+      // load-bearing twice over: (1) min-rid ≡ min-string-id, so decoded
+      // labels are bit-identical to the string implementation
+      // (CCConvergenceSpec pins cluster_id = min member id); (2) the loop's
+      // state trajectory is comparison-only, so rank encoding makes every
+      // batch isomorphic to the string run — same batch count, same probe
+      // behavior. (A scrambled assignment was measured to break the
+      // pointer-jump acceleration on long chains: a 300-vertex path needed
+      // O(diameter) batches instead of O(log), and each batch's checkpoint
+      // re-inherits the plan's estimated sizeInBytes, whose ~200-leaf product
+      // then COMPOUNDS per batch into million-bit BigInts that stall the
+      // optimizer's stats visitor — driver-side, before any task runs.)
+      val dict = {
+        import spark.implicits._
+        val sortedIds = edges.select(col("a").as("id"))
+          .unionByName(edges.select(col("b").as("id")))
+          .distinct()
+          .orderBy("id")
+          .as[String].rdd.zipWithIndex()
+        val (d, ids) = Blocks.materialize(sortedIds.toDF("id", "rid"))
+        kept = ids
+        d
       }
-    // bridge sym into the loop session through a global temp view (public
-    // API; same plan + checkpoint blocks, no data conversion)
-    val symView = "graft_cc_sym_" + java.util.UUID.randomUUID.toString.replace("-", "_")
-    val symLoop = loopSession.map { s =>
-      sym.createOrReplaceGlobalTempView(symView)
-      s.table("global_temp." + symView)
-    }.getOrElse(sym)
 
-    // Only vertices incident to an edge participate in propagation; the
-    // (overwhelmingly more numerous, at production dup rates) singletons
-    // keep their own label and never enter the loop. Initial labels stay
-    // lazy — their plan is one scan of the checkpointed `sym` (constant
-    // size), and round 1 materializes them anyway; a separate init job
-    // would be a pure extra barrier.
-    var labels = symLoop.select(col("src").as("vid")).distinct()
-      .withColumn("label", col("vid"))
+      // Lineage discipline (plan-explosion gotcha): the pointer-jump step
+      // SELF-JOINS each round's frame, so an un-truncated logical plan doubles
+      // per round (2^rounds); and `sym` is re-referenced every round. Both are
+      // therefore materialized eagerly — the plan each round is then two scans,
+      // constant-size, regardless of round count. (Data-wise these frames are
+      // edge-incident rows only — tiny next to the corpus.)
+      val longEdges = edges
+        .join(dict.select(col("id").as("a"), col("rid").as("ra")), Seq("a"))
+        .join(dict.select(col("id").as("b"), col("rid").as("rb")), Seq("b"))
+        .select(col("ra"), col("rb"))
+      val sym = {
+        val (d, ids) = Blocks.materialize(
+          longEdges.select(col("ra").as("src"), col("rb").as("dst"))
+            .unionByName(longEdges.select(col("rb").as("src"), col("ra").as("dst")))
+            .repartition(col("src")))
+        symIds = ids
+        d
+      }
 
-    // One BATCH = two full rounds of (propagate min over edges, then pointer
-    // jump x2) PLUS a final convergence-probe propagate, fused into a single
-    // materialization. Rationale: every driver barrier is fixed latency that
-    // does not shrink with cores (the scaling-efficiency killer); labels
-    // shrink ~16x in distance per batch (2 rounds x jump x2), so almost all
-    // corpora converge in one batch — and the in-batch probe PROVES it
-    // without a second full batch (previously a whole 2-round confirmation
-    // batch, ~14 extra shuffles, ran just to observe changed == 0).
-    //
-    // Probe soundness (why propagate-stability == full convergence): labels
-    // only ever decrease, stay within the vertex's own component, and
-    // label(v) <= v, so the component min m always keeps label(m) = m. If a
-    // propagate changes nothing, then nmin(v) >= label(v) for every v;
-    // walking any path m = x0 - x1 - ... - xk: nmin(x1) <= label(m) = m and
-    // label(x1) <= nmin(x1) give label(x1) = m, and inductively every label
-    // in the component equals m. Uniform root labels also make both jumps
-    // no-ops — nothing in a further batch could change any label.
-    // probe variant keeps the incoming label as `prev` so the converged
-    // test is a filter on the SAME materialized frame (no extra join), and
-    // its own min-fold is still applied — probe work is never thrown away
-    def propagateProbe(d: DataFrame): DataFrame = {
-      val neighborMin = symLoop
-        .join(d.select(col("vid").as("src"), col("label")), "src")
-        .groupBy(col("dst").as("vid"))
-        .agg(min("label").as("nmin"))
-      d.join(neighborMin, Seq("vid"), "left")
-        .select(col("vid"), col("label").as("prev"),
-          least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-    }
-    def propagate(d: DataFrame): DataFrame =
-      propagateProbe(d).select("vid", "label")
-    def jump(d: DataFrame): DataFrame = d
-      .join(d.select(col("vid").as("label"), col("label").as("ll")),
-        Seq("label"), "left")
-      .select(col("vid"),
-        least(col("label"), coalesce(col("ll"), col("label"))).as("label"))
-    def round(d: DataFrame): DataFrame = jump(jump(propagate(d)))
+      // Round-6 floor cut: with AQE on, EVERY exchange in a batch is its own
+      // query-stage job with driver/replan turnaround — ~15 stage-jobs per
+      // batch of tiny checkpoint-backed CC frames, pure serial-floor latency
+      // that does not shrink with cores. The loop therefore runs in a CHILD
+      // session (same SparkContext, own SQLConf — no conf set/restore races
+      // with concurrently-running tier CCs) with AQE off, so one batch is ONE
+      // job with all its stages pipelined by the DAG scheduler. What AQE was
+      // providing the loop is replaced explicitly: (a) runtime partition
+      // coalescing → a static shuffle width derived from the materialized
+      // sym's OWN partition count (AQE already coalesced that exchange to a
+      // data-proportional width; floored for multi-core parallelism) —
+      // scale-adaptive, not a tuned constant; (b) dynamic broadcast — not
+      // applicable: the loop's joins are label-frame ⋈ label-frame/sym, both
+      // sides checkpoint-backed with only product-inflated inherited size
+      // estimates, so AQE never broadcast them here anyway (and at scale they
+      // are not broadcastable). The candidate generators and everything else
+      // keep AQE (fully off was measured 3x worse in round 5 — dynamic
+      // broadcasts there are load-bearing).
+      val loopSession = spark.newSession()
+      loopSession.conf.set("spark.sql.adaptive.enabled", "false")
+      loopSession.conf.set("spark.sql.shuffle.partitions", math.max(
+        sym.rdd.getNumPartitions,
+        math.min(16, spark.sparkContext.defaultParallelism)).toString)
+      // sym's own plan in the loop session: same checkpoint blocks, no data
+      // conversion, nothing registered that a failure could leak
+      val symLoop = GraftFrames.inSession(sym, loopSession)
 
+      // Only vertices incident to an edge participate in propagation; the
+      // (overwhelmingly more numerous, at production dup rates) singletons
+      // keep their own label and never enter the loop. Initial labels stay
+      // lazy — their plan is one scan of the checkpointed `sym` (constant
+      // size), and round 1 materializes them anyway; a separate init job
+      // would be a pure extra barrier.
+      var labels = symLoop.select(col("src").as("vid")).distinct()
+        .withColumn("label", col("vid"))
 
-    var iter = 0
-    // Empty edge set → nothing propagates: skip the loop entirely instead of
-    // paying one full batch to observe it. Not just a test nicety — the
-    // tiered surface runs one CC per tier and the reference ships
-    // sigma_normal = -1 (an ALWAYS-empty normal tier), so this one limit-1
-    // job on the materialized `sym` saves ~15 shuffles per tiered query.
-    // `labels` must then stop referencing `sym` (whose blocks are freed
-    // below, and the lazy init plan scans them).
-    var converged = sym.isEmpty
-    if (converged) {
-      val spark = vertices.sparkSession
-      labels = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vid", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("label", org.apache.spark.sql.types.LongType))))
-    }
-    // blocks of the superseded batch — freed as soon as the next batch is
-    // materialized (the next batch's plan scans its OWN checkpoint, so the
-    // previous blocks are unreferenced from that point on). The FINAL
-    // batch's blocks back the returned labels and must stay.
-    var prevIds = Set.empty[Int]
-    while (!converged && iter < maxIter) {
-      val batchPlan = propagateProbe(round(round(labels)))
-      if (sys.props.contains("graft.ccdebug"))
-        println(s"[ccdebug] iter=$iter analyzed nodes=" +
-          batchPlan.queryExecution.analyzed.collect { case n => n }.size +
-          " labels nodes=" + labels.queryExecution.analyzed.collect { case n => n }.size)
-      val (next, nextIds) = materializeTracked(batchPlan)
-      val probeChanged = next.filter(col("label") =!= col("prev")).count()
-      unpersistIds(next, prevIds)
-      prevIds = nextIds
-      labels = next.select("vid", "label")
-      converged = probeChanged == 0
-      iter += 3 // two full rounds + the probe propagate per batch
-    }
-    // sym is only referenced inside the loop rounds; the returned plan
-    // bottoms out at the final batch's checkpoint + the caller's vertices.
-    // (dict blocks stay: the decode joins below reference them lazily —
-    // they are freed by the caller's session-level tracking, exactly like
-    // the final batch's label blocks.)
-    unpersistIds(sym, symIds)
-    loopSession.foreach(_ => edges.sparkSession.catalog.dropGlobalTempView(symView))
-    if (!converged)
-      System.err.println(s"[graft] WARNING: connectedComponents hit maxIter=$maxIter " +
-        "with labels still changing — components with diameter > 2^maxIter may be " +
-        "returned SPLIT (recall, not precision, is at risk). Raise maxIter.")
-    // Decode + re-attach: rids back to ids with two dict joins — the label
-    // rid IS the min member's rank, so its decoded id IS the min member id
-    // (order-preserving encoding) — and every non-edge input vertex labels
-    // itself (singleton clusters).
-    val mapped = labels
-      .join(dict.select(col("rid").as("vid"), col("id").as("image_id")), Seq("vid"))
-      .join(dict.select(col("rid").as("label"), col("id").as("cluster_id")), Seq("label"))
-      .select("image_id", "cluster_id")
-    val out = vertices
-      .select(col("image_id"))
-      .join(mapped, Seq("image_id"), "left")
-      .select(col("image_id"), coalesce(col("cluster_id"), col("image_id")).as("cluster_id"))
-    CCResult(out, iter, converged)
+      // One BATCH = two full rounds of (propagate min over edges, then pointer
+      // jump x2) PLUS a final convergence-probe propagate, fused into a single
+      // materialization. Rationale: every driver barrier is fixed latency that
+      // does not shrink with cores (the scaling-efficiency killer); labels
+      // shrink ~16x in distance per batch (2 rounds x jump x2), so almost all
+      // corpora converge in one batch — and the in-batch probe PROVES it
+      // without a second full batch (previously a whole 2-round confirmation
+      // batch, ~14 extra shuffles, ran just to observe changed == 0).
+      //
+      // Probe soundness (why propagate-stability == full convergence): labels
+      // only ever decrease, stay within the vertex's own component, and
+      // label(v) <= v, so the component min m always keeps label(m) = m. If a
+      // propagate changes nothing, then nmin(v) >= label(v) for every v;
+      // walking any path m = x0 - x1 - ... - xk: nmin(x1) <= label(m) = m and
+      // label(x1) <= nmin(x1) give label(x1) = m, and inductively every label
+      // in the component equals m. Uniform root labels also make both jumps
+      // no-ops — nothing in a further batch could change any label.
+      // probe variant keeps the incoming label as `prev` so the converged
+      // test is a filter on the SAME materialized frame (no extra join), and
+      // its own min-fold is still applied — probe work is never thrown away
+      def propagateProbe(d: DataFrame): DataFrame = {
+        val neighborMin = symLoop
+          .join(d.select(col("vid").as("src"), col("label")), "src")
+          .groupBy(col("dst").as("vid"))
+          .agg(min("label").as("nmin"))
+        d.join(neighborMin, Seq("vid"), "left")
+          .select(col("vid"), col("label").as("prev"),
+            least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
+      }
+      def propagate(d: DataFrame): DataFrame =
+        propagateProbe(d).select("vid", "label")
+      def jump(d: DataFrame): DataFrame = d
+        .join(d.select(col("vid").as("label"), col("label").as("ll")),
+          Seq("label"), "left")
+        .select(col("vid"),
+          least(col("label"), coalesce(col("ll"), col("label"))).as("label"))
+      def round(d: DataFrame): DataFrame = jump(jump(propagate(d)))
+
+      var iter = 0
+      // Empty edge set → nothing propagates: skip the loop entirely instead of
+      // paying one full batch to observe it. Not just a test nicety — the
+      // tiered surface runs one CC per tier and the reference ships
+      // sigma_normal = -1 (an ALWAYS-empty normal tier), so this one limit-1
+      // job on the materialized `sym` saves ~15 shuffles per tiered query.
+      // `labels` must then stop referencing `sym` (whose blocks are freed
+      // on return, and the lazy init plan scans them).
+      var converged = sym.isEmpty
+      if (converged) {
+        val vs = vertices.sparkSession
+        labels = vs.createDataFrame(vs.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(Seq(StructField("vid", LongType), StructField("label", LongType))))
+      }
+      // blocks of the superseded batch — freed as soon as the next batch is
+      // materialized (the next batch's plan scans its OWN checkpoint, so the
+      // previous blocks are unreferenced from that point on). The FINAL
+      // batch's blocks back the returned labels and stay in `kept`.
+      var prevIds = Set.empty[Int]
+      while (!converged && iter < maxIter) {
+        val (next, nextIds) = Blocks.materialize(propagateProbe(round(round(labels))))
+        kept ++= nextIds
+        val probeChanged = next.filter(col("label") =!= col("prev")).count()
+        Blocks.free(spark, prevIds)
+        kept --= prevIds
+        prevIds = nextIds
+        labels = next.select("vid", "label")
+        converged = probeChanged == 0
+        iter += 3 // two full rounds + the probe propagate per batch
+      }
+      // sym is only referenced inside the loop rounds (freed on return); the
+      // returned plan bottoms out at `kept` (the final batch's checkpoint and
+      // the dict the decode joins below read) + the caller's vertices.
+      if (!converged)
+        System.err.println(s"[graft] WARNING: connectedComponents hit maxIter=$maxIter " +
+          "with labels still changing — components with diameter > 2^maxIter may be " +
+          "returned SPLIT (recall, not precision, is at risk). Raise maxIter.")
+      // Decode + re-attach: rids back to ids with two dict joins — the label
+      // rid IS the min member's rank, so its decoded id IS the min member id
+      // (order-preserving encoding) — and every non-edge input vertex labels
+      // itself (singleton clusters).
+      val mapped = labels
+        .join(dict.select(col("rid").as("vid"), col("id").as("image_id")), Seq("vid"))
+        .join(dict.select(col("rid").as("label"), col("id").as("cluster_id")), Seq("label"))
+        .select("image_id", "cluster_id")
+      val out = vertices
+        .select(col("image_id"))
+        .join(mapped, Seq("image_id"), "left")
+        .select(col("image_id"), coalesce(col("cluster_id"), col("image_id")).as("cluster_id"))
+      CCResult(out, iter, converged, kept)
+    } catch {
+      case e: Throwable => Blocks.free(spark, kept); throw e
+    } finally Blocks.free(spark, symIds)
   }
+
+  private def requireStringIds(df: DataFrame, what: String, cols: String*): Unit =
+    cols.foreach { c =>
+      val t = df.schema(c).dataType
+      require(t == StringType, s"connectedComponents: $what id column '$c' is " +
+        s"${t.simpleString}; ids must be strings (cast them first)")
+    }
 
   /** Cluster statistics (SURVEY.md §2.5 A2): per-cluster member count and
     * span stats — analogue of CloneSetSInfo min/max/avg/total
@@ -298,54 +268,41 @@ object Clustering {
     * shipped reference config has sigma_normal = -1 (normal tier matches
     * nothing — dif_config.txt:3); callers pass a positive sigma to light the
     * tier up. Tier-split size histogram = groupBy(tier, size) downstream.
-    */
-  def tieredClusters(vertices: DataFrame,
-                     edgesByTier: Seq[(String, DataFrame)],
-                     failOnNonConvergence: Boolean = true): DataFrame =
-    tieredClustersResults(vertices, edgesByTier).map { case (tier, cc) =>
-      // surface non-convergence at this level, not just a stderr warning
-      // buried in connectedComponents — a split component is a RECALL bug
-      // the caller must see (round-2 ADVICE)
-      if (!cc.converged) {
-        val msg = s"tieredClusters: tier '$tier' did NOT converge in " +
-          s"${cc.iterations} rounds — components may be returned split"
-        if (failOnNonConvergence) throw new IllegalStateException(msg)
-        else System.err.println(s"[graft] WARNING: $msg")
-      }
-      cc.labels.withColumn("tier", lit(tier))
-    }.reduce(_.unionByName(_))
-
-  /** Per-tier CC runs with full [[CCResult]]s (iterations + converged flag)
-    * for callers that need the convergence state per tier.
+    *
+    * Returns the stacked labels MATERIALIZED: the frame reads only its own
+    * checkpoint, and every tier's CC blocks are freed before returning.
     *
     * Tiers run CONCURRENTLY from driver threads (guide §2.6): each tier's
     * CC is an independent chain of small jobs whose cost is dominated by
     * driver/AQE barrier latency, not task work (round-6 probe: ~36 jobs and
     * ~3-10 task-core-s per tier at sf0.1) — overlapping them hides one
     * tier's barriers behind the other's, and the later tier's tasks
-    * back-fill the earlier tier's idle cores. Safe because
-    * [[materializeTracked]] attributes checkpoint blocks from the frame's
-    * own plan (thread-confined), and Spark's scheduler handles concurrent
-    * actions from one driver natively.
+    * back-fill the earlier tier's idle cores. Safe because [[Blocks]]
+    * attributes checkpoint blocks from the frame's own plan
+    * (thread-confined), and Spark's scheduler handles concurrent actions
+    * from one driver natively. Every tier finishes before anything is freed
+    * or rethrown, so a failing tier cannot strand the other tier's blocks.
     */
-  def tieredClustersResults(vertices: DataFrame,
-                            edgesByTier: Seq[(String, DataFrame)])
-      : Seq[(String, CCResult)] = {
-    if (edgesByTier.size <= 1)
-      edgesByTier.map { case (tier, edges) =>
-        tier -> connectedComponents(vertices, edges)
-      }
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(edgesByTier.size)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      try {
-        val futures = edgesByTier.map { case (tier, edges) =>
-          Future { tier -> connectedComponents(vertices, edges) }
-        }
-        futures.map(Await.result(_, Duration.Inf))
-      } finally pool.shutdown()
-    }
+  def tieredClusters(vertices: DataFrame, edgesByTier: Seq[(String, DataFrame)]): DataFrame = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(edgesByTier.size)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val runs = try {
+      edgesByTier.map { case (tier, edges) => Future(tier -> connectedComponents(vertices, edges)) }
+        .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+    } finally pool.shutdown()
+    try {
+      val stacked = runs.map(_.get).map { case (tier, cc) =>
+        // surface non-convergence at this level, not just a stderr warning
+        // buried in connectedComponents — a split component is a RECALL bug
+        // the caller must see (round-2 ADVICE)
+        if (!cc.converged)
+          throw new IllegalStateException(s"tieredClusters: tier '$tier' did NOT " +
+            s"converge in ${cc.iterations} rounds — components may be returned split")
+        cc.labels.withColumn("tier", lit(tier))
+      }.reduce(_.unionByName(_))
+      Blocks.materialize(stacked)._1
+    } finally Blocks.free(vertices.sparkSession, runs.flatMap(_.toOption).flatMap(_._2.blocks))
   }
 }

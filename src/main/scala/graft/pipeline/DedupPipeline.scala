@@ -25,21 +25,17 @@ object DedupPipeline {
     * select only what they need downstream; the fingerprint stage reads
     * (image_id, caption, phash) and never `bytes`.
     */
-  def ingest(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    val valid =
-      if (df.columns.contains("bytes")) df.filter(col("bytes").isNotNull) else df
-    valid.filter(col("image_id").isNotNull && col("caption").isNotNull)
-  }
+  def ingest(spark: SparkSession, path: String): DataFrame = valid(spark.read.parquet(path))
 
   /** Seam-routed ingest: same validity filter, table resolved through
     * [[graft.sources.TableIO]] (Iceberg-shaped at scale, parquet here).
     */
-  def ingest(io: graft.sources.TableIO, table: String): DataFrame = {
-    val df = io.read(table)
-    val valid =
+  def ingest(io: graft.sources.TableIO, table: String): DataFrame = valid(io.read(table))
+
+  private def valid(df: DataFrame): DataFrame = {
+    val withBytes =
       if (df.columns.contains("bytes")) df.filter(col("bytes").isNotNull) else df
-    valid.filter(col("image_id").isNotNull && col("caption").isNotNull)
+    withBytes.filter(col("image_id").isNotNull && col("caption").isNotNull)
   }
 
   /** Row-level resume filter (SURVEY.md §2.2 F2): drop rows whose ids are
@@ -81,20 +77,13 @@ object DedupPipeline {
     // falls back to localCheckpoint (executor-resident blocks — fine in a
     // single-JVM sandbox, NOT the cluster default).
     def staged(name: String)(f: => DataFrame): DataFrame = {
-      // job labels (guide §1.5) — make the UI/event log attributable
-      spark.sparkContext.setJobDescription(s"graft: stage $name")
-      val out = audit.map(_.stage(name)(f)).getOrElse {
-        val t0 = System.nanoTime()
-        val df = f
-        val cp =
-          if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-          else df.localCheckpoint(true)
-        if (sys.props.contains("graft.profile"))
-          println(f"[profile] stage $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        cp
-      }
-      spark.sparkContext.setJobDescription(null)
-      out
+      // job labels (guide §1.5) — make the UI/event log attributable; the
+      // caller's own label comes back even when the stage throws
+      val sc = spark.sparkContext
+      val outer = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"graft: stage $name")
+      try audit.map(_.stage(name)(f)).getOrElse(Blocks.materialize(f)._1)
+      finally sc.setJobDescription(outer)
     }
 
     val fpsDf = staged("fingerprints") {
@@ -119,15 +108,19 @@ object DedupPipeline {
       } else base
     }
 
+    // the CC labels are lazy over CC's own blocks: freed once the stage has
+    // materialized them (or failed)
     var ccIters = -1
-    val clusters = staged("clusters") {
+    var ccBlocks = Set.empty[Int]
+    val clusters = try staged("clusters") {
       val cc = Clustering.connectedComponents(fps.toDF().select("image_id"), edges)
       ccIters = cc.iterations
+      ccBlocks = cc.blocks
       audit.foreach(_.log("cc_iterations", cc.iterations.toLong, 0L, committed = false,
         detail = s"label propagation ${if (cc.converged) "converged" else "DID NOT CONVERGE"}" +
           s" in ${cc.iterations} rounds"))
       cc.labels
-    }
+    } finally Blocks.free(spark, ccBlocks)
 
     // Terminal aggregation over two already-materialized scans: staging it
     // would add a whole extra job to every run for no reuse benefit — with

@@ -27,6 +27,26 @@ import graft.core.GraftConfig
   */
 object Substring {
 
+  /** Anchor-width census (round 6): bit w-1 is set iff some anchor (a row
+    * over minSpan) has width w = min(k, words). Gram keys are SEEDED by
+    * width, so a width-w anchor can only ever join width-w haystack keys —
+    * haystack rows of widths no anchor has are dead shuffle weight (the
+    * haystack explosion was the pipeline's largest exchange at 1M images,
+    * ~2 GB, and widths below k only exist for anchors whose WHOLE caption
+    * is shorter than k words yet over minSpan chars — rare to absent). One
+    * tiny aggregation measures which widths exist and the explode emits
+    * only those; provably output-identical as long as `split` on " "
+    * counts words exactly as `GramHash` tokenizes (SubstringSpec pins it).
+    * At most k (≤3) mask bits.
+    */
+  private[graft] def anchorWidthMask(rows: DataFrame, cfg: GraftConfig): Int =
+    rows
+      .filter(col("span") > cfg.minSpan)
+      .select(least(lit(cfg.shingleK), size(split(col("caption_norm"), " "))).as("w"))
+      .groupBy("w").agg(count(lit(1)))
+      .collect().map(_.getInt(0))
+      .foldLeft(0)((m, w) => m | (1 << (w - 1)))
+
   /** @param rows (image_id, caption_norm, span) — caption already normalized
     * @param cfg   anchor gram width in words = cfg.shingleK
     * @return (a, b): a's caption is a proper word-aligned substring of b's
@@ -34,21 +54,7 @@ object Substring {
   def substringPairs(rows: DataFrame, cfg: GraftConfig): DataFrame = {
     val k = cfg.shingleK
     val spark = rows.sparkSession
-    // Anchor-width census (round 6): gram keys are SEEDED by width, so a
-    // width-w anchor can only ever join width-w haystack keys — haystack
-    // rows of widths no anchor has are dead shuffle weight (the haystack
-    // explosion was the pipeline's largest exchange at 1M images, ~2 GB,
-    // and widths below k only exist for anchors whose WHOLE caption is
-    // shorter than k words yet over minSpan chars — rare to absent). One
-    // tiny aggregation measures which widths exist and the explode emits
-    // only those; provably output-identical. At most k (≤3) mask bits.
-    val widthCol = least(lit(k), size(split(col("caption_norm"), " ")))
-    val widthMask = rows
-      .filter(col("span") > cfg.minSpan)
-      .select(widthCol.as("w"))
-      .groupBy("w").agg(count(lit(1)))
-      .collect().map(_.getInt(0))
-      .foldLeft(0)((m, w) => m | (1 << (w - 1)))
+    val widthMask = anchorWidthMask(rows, cfg)
     if (widthMask == 0) { // no anchors at all -> no pairs
       return rows.sparkSession.createDataFrame(
         rows.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.Candidates
+import graft.pipeline.{Blocks, Candidates}
 
 /** Text-analysis + dedup operators over the `documents` corpus — the
   * training-data-pipeline operations (dedup, quality, token stats, language
@@ -81,58 +81,63 @@ object TextOps {
     *     within-group pairs are j = 1.0 exactly — the same values the
     *     all-pairs join produced.
     *
+    * Returns the pair set MATERIALIZED; the gram-set blocks are freed before
+    * returning.
+    *
     * @param hotGramCap bucket size above which gram-bucket salting applies
     *                   (tests force the hot path with a tiny cap)
     */
   def ngramJaccardPairs(docs: DataFrame, n: Int, tau: Double,
                         hotGramCap: Int = 500): DataFrame = {
-    // (image_id, gset) — the ONLY pass over the raw text; localCheckpoint
+    // (image_id, gset) — the ONLY pass over the raw text; materializing
     // pins it (collapse, sample, cold/hot join branches, sizes and the
     // star expansion all re-read these blocks at scan speed).
-    val docSets = scanFloor(docs.select(col("doc_id"), col("text")))
-      .select(col("doc_id").as("image_id"),
-        sort_array(array_distinct(wordNgrams(toks, n))).as("gset"))
-      .localCheckpoint()
-    val (reps, star) = Candidates.collapseExact(docSets, Seq("gset"))
+    val (docSets, docSetIds) = Blocks.materialize(
+      scanFloor(docs.select(col("doc_id"), col("text")))
+        .select(col("doc_id").as("image_id"),
+          sort_array(array_distinct(wordNgrams(toks, n))).as("gset")))
+    try {
+      val (reps, star) = Candidates.collapseExact(docSets, Seq("gset"))
 
-    // representative gram rows, bucket-keyed by the 64-bit gram hash; the
-    // gram string rides along for the exact equality check
-    val keyed = reps
-      .select(col("image_id"), explode(col("gset")).as("gram"))
-      .select(col("image_id"), xxhash64(col("gram")).as("gh"), col("gram"))
-    val inter = Candidates.bucketSelfJoin(keyed, Seq("gh"), hotGramCap)
-      .filter(col("l_gram") === col("r_gram")) // hash buckets, strings decide
-      .groupBy(col("l_image_id").as("da"), col("r_image_id").as("db"))
-      .agg(count(lit(1)).as("inter"))
+      // representative gram rows, bucket-keyed by the 64-bit gram hash; the
+      // gram string rides along for the exact equality check
+      val keyed = reps
+        .select(col("image_id"), explode(col("gset")).as("gram"))
+        .select(col("image_id"), xxhash64(col("gram")).as("gh"), col("gram"))
+      val inter = Candidates.bucketSelfJoin(keyed, Seq("gh"), hotGramCap)
+        .filter(col("l_gram") === col("r_gram")) // hash buckets, strings decide
+        .groupBy(col("l_image_id").as("da"), col("r_image_id").as("db"))
+        .agg(count(lit(1)).as("inter"))
 
-    val sizes = reps.select(col("image_id"), size(col("gset")).as("n"))
-    val repPairs = inter
-      .join(sizes.toDF("da", "na"), "da")
-      .join(sizes.toDF("db", "nb"), "db")
-      .withColumn("j", round(col("inter") / (col("na") + col("nb") - col("inter")), 6))
-      .filter(col("j") >= tau)
-      .select("da", "db", "j")
+      val sizes = reps.select(col("image_id"), size(col("gset")).as("n"))
+      val repPairs = inter
+        .join(sizes.toDF("da", "na"), "da")
+        .join(sizes.toDF("db", "nb"), "db")
+        .withColumn("j", round(col("inter") / (col("na") + col("nb") - col("inter")), 6))
+        .filter(col("j") >= tau)
+        .select("da", "db", "j")
 
-    // expansion through the identity star (same argument as
-    // Candidates.expandThroughStar, with j carried): each member belongs to
-    // exactly one representative, so cross pairs map 1:1 onto rep pairs (no
-    // dedup needed) and inherit j unchanged; within-group pairs are exactly
-    // the Jaccard-1 pairs of the identical-set clique. rep = min member id,
-    // so rep < member and least/greatest keeps da < db like the all-pairs
-    // join's `a.doc_id < b.doc_id`.
-    val members = star.select(col("a").as("rep"), col("b").as("member"))
-      .unionByName(reps.select(col("image_id").as("rep"), col("image_id").as("member")))
-    val cross = repPairs
-      .join(members.select(col("rep").as("da"), col("member").as("x")), "da")
-      .join(members.select(col("rep").as("db"), col("member").as("y")), "db")
-      .select(least(col("x"), col("y")).as("da"),
-        greatest(col("x"), col("y")).as("db"), col("j"))
-    val within = members.alias("m1")
-      .join(members.alias("m2"), col("m1.rep") === col("m2.rep") &&
-        col("m1.member") < col("m2.member"))
-      .select(col("m1.member").as("da"), col("m2.member").as("db"),
-        lit(1.0).as("j"))
-      .filter(col("j") >= tau)
-    cross.unionByName(within)
+      // expansion through the identity star (same argument as
+      // Candidates.expandThroughStar, with j carried): each member belongs to
+      // exactly one representative, so cross pairs map 1:1 onto rep pairs (no
+      // dedup needed) and inherit j unchanged; within-group pairs are exactly
+      // the Jaccard-1 pairs of the identical-set clique. rep = min member id,
+      // so rep < member and least/greatest keeps da < db like the all-pairs
+      // join's `a.doc_id < b.doc_id`.
+      val members = star.select(col("a").as("rep"), col("b").as("member"))
+        .unionByName(reps.select(col("image_id").as("rep"), col("image_id").as("member")))
+      val cross = repPairs
+        .join(members.select(col("rep").as("da"), col("member").as("x")), "da")
+        .join(members.select(col("rep").as("db"), col("member").as("y")), "db")
+        .select(least(col("x"), col("y")).as("da"),
+          greatest(col("x"), col("y")).as("db"), col("j"))
+      val within = members.alias("m1")
+        .join(members.alias("m2"), col("m1.rep") === col("m2.rep") &&
+          col("m1.member") < col("m2.member"))
+        .select(col("m1.member").as("da"), col("m2.member").as("db"),
+          lit(1.0).as("j"))
+        .filter(col("j") >= tau)
+      Blocks.materialize(cross.unionByName(within))._1
+    } finally Blocks.free(docs.sparkSession, docSetIds)
   }
 }

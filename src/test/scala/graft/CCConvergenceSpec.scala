@@ -75,4 +75,20 @@ class CCConvergenceSpec extends AnyFunSuite {
     assert(Seq(5, 6, 7).forall(i => m(vs(i)) == vs(5)))
     assert(m(vs(2)) == vs(2) && m(vs(4)) == vs(4))
   }
+
+  test("non-string id columns are rejected before any job, naming column and type") {
+    import spark.implicits._
+    // evaluating these edges throws, so a job that ran before the type check
+    // would surface "edges were scanned" instead of the type error
+    val longEdges = spark.range(4).select(
+      when(col("id") >= 0, raise_error(lit("edges were scanned"))).otherwise(col("id")).as("a"),
+      (col("id") + 1).as("b"))
+    val e = intercept[IllegalArgumentException](
+      Clustering.connectedComponents(ids(5).toDF("image_id"), longEdges))
+    assert(e.getMessage.contains("'a'") && e.getMessage.contains("bigint"), e.getMessage)
+
+    val v = intercept[IllegalArgumentException](
+      Clustering.connectedComponents(spark.range(3).toDF("image_id"), Seq(("v0", "v1")).toDF("a", "b")))
+    assert(v.getMessage.contains("'image_id'") && v.getMessage.contains("bigint"), v.getMessage)
+  }
 }

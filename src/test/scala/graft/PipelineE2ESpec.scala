@@ -155,6 +155,19 @@ class PipelineE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(histN === predictedLabels.size)
   }
 
+  test("a stage that throws restores the caller's job description") {
+    val sc = spark.sparkContext
+    import spark.implicits._
+    val images = Seq(("x1", 1L), ("x2", 2L)).toDF("image_id", "phash")
+      .withColumn("caption", when(col("image_id") === "x2", raise_error(lit("bad caption")))
+        .otherwise(lit("a caption long enough to fingerprint")))
+    sc.setJobDescription("outer")
+    try {
+      intercept[Exception](DedupPipeline.run(images, cfg))
+      assert(sc.getLocalProperty("spark.job.description") === "outer")
+    } finally sc.setJobDescription(null)
+  }
+
   test("clustering is independent of partitioning (2 vs 8 partitions)") {
     val edges = result.edges
     val verts = result.fingerprints.toDF().select("image_id")
