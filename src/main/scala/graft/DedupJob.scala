@@ -25,7 +25,8 @@ import graft.sources.ParquetTableIO
   * Exit contract: prints one summary line
   * `[graft.DedupJob] rows=<n> clusters=<n> dup_clusters=<n> cc_iters=<n>`
   * and returns normally on success; any stage failure propagates as a
-  * nonzero spark-submit exit.
+  * nonzero spark-submit exit — including connected components hitting
+  * maxIter unconverged, which is logged to the audit ledger first.
   */
 object DedupJob {
 

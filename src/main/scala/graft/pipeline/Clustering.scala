@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, GraftFrames}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StringType
 
 /** Iterative Dataset-based connected components (hash-partitioned min-label
   * propagation) — the scalable replacement for the reference's in-memory
@@ -21,9 +21,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * Algorithm: each round (1) propagates the min label across edges in both
   * directions, then (2) path-compresses: since every label IS a vertex id,
   * a vertex can jump to its current label's label — convergence in
-  * O(log diameter) rounds instead of O(diameter). Each round materializes
-  * eagerly with ONE driver-side barrier (the changed-label count); all data
-  * stays distributed.
+  * O(log diameter) rounds instead of O(diameter). Each batch of rounds is
+  * one materialization whose changed-label count is observed by that same
+  * job; all data stays distributed.
   */
 object Clustering {
 
@@ -32,13 +32,28 @@ object Clustering {
     * @param iterations rounds run
     * @param converged  false iff maxIter was hit with labels still changing —
     *                   the component partition may then be SPLIT (never
-    *                   over-merged); callers must surface this.
+    *                   over-merged); callers must surface this
+    *                   ([[requireConverged]]).
     * @param blocks     persisted-RDD ids backing `labels` (the id dictionary
     *                   and the final label batch): the caller frees them with
     *                   [[Blocks.free]] once it has materialized the labels
     */
   final case class CCResult(labels: DataFrame, iterations: Int, converged: Boolean,
                             blocks: Set[Int])
+
+  /** Throws unless `cc` converged: a component cut off at maxIter may be
+    * returned split, which loses recall without any other visible sign.
+    */
+  def requireConverged(cc: CCResult, what: String): Unit =
+    if (!cc.converged)
+      throw new IllegalStateException(s"$what: connected components did NOT converge " +
+        s"in ${cc.iterations} rounds — components may be returned split")
+
+  /** Observation names: rows of the symmetric edge set, and the batch
+    * probe's changed-label count.
+    */
+  private val SymRows = "graft_cc_sym_rows"
+  private val ProbeChanged = "graft_cc_probe_changed"
 
   /** @param edges  (a, b) string-id pairs, each pair once in either order
     * @param vertices single-column "image_id" frame of ALL rows to label
@@ -59,51 +74,47 @@ object Clustering {
       // materialization in these joins as the top remaining allocation site,
       // and allocation churn is the box's measured multi-thread contention
       // driver — BENCH.md §hardware). Edge-incident ids are dictionary-encoded
-      // ONCE into compact longs; every per-round join/aggregation then moves
+      // ONCE into longs; every per-round join/aggregation then moves
       // (bigint, bigint) rows instead of string pairs.
       //
-      // The rid is the id's RANK in string order (sort + zipWithIndex,
-      // materialized through the checkpoint seam so the assignment is stable
-      // across subtree re-executions — `monotonically_increasing_id` alone is
-      // neither stable nor usable here). ORDER-PRESERVING encoding is
+      // The rid preserves string order: after a range-partitioned sort every
+      // key of partition i sorts below every key of partition i+1, and
+      // `monotonically_increasing_id` is (partition index << 33) + row index.
+      // The ids are computed once, by the materialization below, so every
+      // later reader sees the same assignment. ORDER-PRESERVING encoding is
       // load-bearing twice over: (1) min-rid ≡ min-string-id, so decoded
       // labels are bit-identical to the string implementation
       // (CCConvergenceSpec pins cluster_id = min member id); (2) the loop's
-      // state trajectory is comparison-only, so rank encoding makes every
-      // batch isomorphic to the string run — same batch count, same probe
-      // behavior. (A scrambled assignment was measured to break the
-      // pointer-jump acceleration on long chains: a 300-vertex path needed
-      // O(diameter) batches instead of O(log), and each batch's checkpoint
-      // re-inherits the plan's estimated sizeInBytes, whose ~200-leaf product
-      // then COMPOUNDS per batch into million-bit BigInts that stall the
-      // optimizer's stats visitor — driver-side, before any task runs.)
+      // state trajectory is comparison-only, so an order-preserving encoding
+      // makes every batch isomorphic to the string run — same batch count,
+      // same probe behavior. (A scrambled assignment was measured to break
+      // the pointer-jump acceleration on long chains: a 300-vertex path
+      // needed O(diameter) batches instead of O(log), and each batch's
+      // checkpoint inherits the plan's estimated size, so the estimates
+      // compound per batch into BigInts that stall the optimizer.)
       val dict = {
-        import spark.implicits._
-        val sortedIds = edges.select(col("a").as("id"))
+        val (d, ids) = Blocks.materialize(edges.select(col("a").as("id"))
           .unionByName(edges.select(col("b").as("id")))
           .distinct()
           .orderBy("id")
-          .as[String].rdd.zipWithIndex()
-        val (d, ids) = Blocks.materialize(sortedIds.toDF("id", "rid"))
+          .withColumn("rid", monotonically_increasing_id()))
         kept = ids
         d
       }
 
-      // Lineage discipline (plan-explosion gotcha): the pointer-jump step
-      // SELF-JOINS each round's frame, so an un-truncated logical plan doubles
-      // per round (2^rounds); and `sym` is re-referenced every round. Both are
-      // therefore materialized eagerly — the plan each round is then two scans,
-      // constant-size, regardless of round count. (Data-wise these frames are
-      // edge-incident rows only — tiny next to the corpus.)
+      // `sym` is re-read by every propagate of every batch, so it is
+      // materialized once; the same job observes its row count, which
+      // decides the empty-edge exit below without a job of its own.
       val longEdges = edges
         .join(dict.select(col("id").as("a"), col("rid").as("ra")), Seq("a"))
         .join(dict.select(col("id").as("b"), col("rid").as("rb")), Seq("b"))
         .select(col("ra"), col("rb"))
+      val symPlan = longEdges.select(col("ra").as("src"), col("rb").as("dst"))
+        .unionByName(longEdges.select(col("rb").as("src"), col("ra").as("dst")))
+        .repartition(col("src"))
+        .observe(SymRows, count(lit(1)))
       val sym = {
-        val (d, ids) = Blocks.materialize(
-          longEdges.select(col("ra").as("src"), col("rb").as("dst"))
-            .unionByName(longEdges.select(col("rb").as("src"), col("ra").as("dst")))
-            .repartition(col("src")))
+        val (d, ids) = Blocks.materialize(symPlan)
         symIds = ids
         d
       }
@@ -137,90 +148,38 @@ object Clustering {
 
       // Only vertices incident to an edge participate in propagation; the
       // (overwhelmingly more numerous, at production dup rates) singletons
-      // keep their own label and never enter the loop. Initial labels stay
-      // lazy — their plan is one scan of the checkpointed `sym` (constant
-      // size), and round 1 materializes them anyway; a separate init job
-      // would be a pure extra barrier.
-      var labels = symLoop.select(col("src").as("vid")).distinct()
-        .withColumn("label", col("vid"))
-
-      // One BATCH = two full rounds of (propagate min over edges, then pointer
-      // jump x2) PLUS a final convergence-probe propagate, fused into a single
-      // materialization. Rationale: every driver barrier is fixed latency that
-      // does not shrink with cores (the scaling-efficiency killer); labels
-      // shrink ~16x in distance per batch (2 rounds x jump x2), so almost all
-      // corpora converge in one batch — and the in-batch probe PROVES it
-      // without a second full batch (previously a whole 2-round confirmation
-      // batch, ~14 extra shuffles, ran just to observe changed == 0).
-      //
-      // Probe soundness (why propagate-stability == full convergence): labels
-      // only ever decrease, stay within the vertex's own component, and
-      // label(v) <= v, so the component min m always keeps label(m) = m. If a
-      // propagate changes nothing, then nmin(v) >= label(v) for every v;
-      // walking any path m = x0 - x1 - ... - xk: nmin(x1) <= label(m) = m and
-      // label(x1) <= nmin(x1) give label(x1) = m, and inductively every label
-      // in the component equals m. Uniform root labels also make both jumps
-      // no-ops — nothing in a further batch could change any label.
-      // probe variant keeps the incoming label as `prev` so the converged
-      // test is a filter on the SAME materialized frame (no extra join), and
-      // its own min-fold is still applied — probe work is never thrown away
-      def propagateProbe(d: DataFrame): DataFrame = {
-        val neighborMin = symLoop
-          .join(d.select(col("vid").as("src"), col("label")), "src")
-          .groupBy(col("dst").as("vid"))
-          .agg(min("label").as("nmin"))
-        d.join(neighborMin, Seq("vid"), "left")
-          .select(col("vid"), col("label").as("prev"),
-            least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-      }
-      def propagate(d: DataFrame): DataFrame =
-        propagateProbe(d).select("vid", "label")
-      def jump(d: DataFrame): DataFrame = d
-        .join(d.select(col("vid").as("label"), col("label").as("ll")),
-          Seq("label"), "left")
-        .select(col("vid"),
-          least(col("label"), coalesce(col("ll"), col("label"))).as("label"))
-      def round(d: DataFrame): DataFrame = jump(jump(propagate(d)))
+      // keep their own label and never enter the loop. Every dict id labels
+      // itself to start: one scan of the checkpointed dict (bridged into the
+      // loop session like sym), which backs the returned labels anyway.
+      var labels = GraftFrames.inSession(dict, loopSession)
+        .select(col("rid").as("vid"), col("rid").as("label"))
 
       var iter = 0
-      // Empty edge set → nothing propagates: skip the loop entirely instead of
-      // paying one full batch to observe it. Not just a test nicety — the
-      // tiered surface runs one CC per tier and the reference ships
-      // sigma_normal = -1 (an ALWAYS-empty normal tier), so this one limit-1
-      // job on the materialized `sym` saves ~15 shuffles per tiered query.
-      // `labels` must then stop referencing `sym` (whose blocks are freed
-      // on return, and the lazy init plan scans them).
-      var converged = sym.isEmpty
-      if (converged) {
-        val vs = vertices.sparkSession
-        labels = vs.createDataFrame(vs.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("vid", LongType), StructField("label", LongType))))
-      }
+      // Empty edge set → nothing propagates: no batch runs. Not just a test
+      // nicety — the tiered surface runs one CC per tier and the reference
+      // ships sigma_normal = -1 (an ALWAYS-empty normal tier).
+      var converged = observed(symPlan, SymRows) == 0
       // blocks of the superseded batch — freed as soon as the next batch is
       // materialized (the next batch's plan scans its OWN checkpoint, so the
       // previous blocks are unreferenced from that point on). The FINAL
       // batch's blocks back the returned labels and stay in `kept`.
       var prevIds = Set.empty[Int]
       while (!converged && iter < maxIter) {
-        val (next, nextIds) = Blocks.materialize(propagateProbe(round(round(labels))))
+        val plan = batch(symLoop, labels)
+        val (next, nextIds) = Blocks.materialize(plan)
         kept ++= nextIds
-        val probeChanged = next.filter(col("label") =!= col("prev")).count()
         Blocks.free(spark, prevIds)
         kept --= prevIds
         prevIds = nextIds
         labels = next.select("vid", "label")
-        converged = probeChanged == 0
+        converged = observed(plan, ProbeChanged) == 0
         iter += 3 // two full rounds + the probe propagate per batch
       }
       // sym is only referenced inside the loop rounds (freed on return); the
       // returned plan bottoms out at `kept` (the final batch's checkpoint and
       // the dict the decode joins below read) + the caller's vertices.
-      if (!converged)
-        System.err.println(s"[graft] WARNING: connectedComponents hit maxIter=$maxIter " +
-          "with labels still changing — components with diameter > 2^maxIter may be " +
-          "returned SPLIT (recall, not precision, is at risk). Raise maxIter.")
       // Decode + re-attach: rids back to ids with two dict joins — the label
-      // rid IS the min member's rank, so its decoded id IS the min member id
+      // rid IS the min member's rid, so its decoded id IS the min member id
       // (order-preserving encoding) — and every non-edge input vertex labels
       // itself (singleton clusters).
       val mapped = labels
@@ -236,6 +195,73 @@ object Clustering {
       case e: Throwable => Blocks.free(spark, kept); throw e
     } finally Blocks.free(spark, symIds)
   }
+
+  /** One BATCH over `sym` (src, dst; both directions) and `labels`
+    * (vid, label): two full rounds of (propagate, jump, jump) plus a final
+    * convergence-probe propagate, as (vid, prev, label) — `prev` is the
+    * label the probe started from. The probe's changed-label count is
+    * observed by the job that materializes the frame.
+    *
+    * Rationale: every driver barrier is fixed latency that does not shrink
+    * with cores; labels shrink ~16x in distance per batch (2 rounds x jump
+    * x2), so almost all corpora converge in one batch — and the in-batch
+    * probe PROVES it without a second full batch.
+    *
+    * Probe soundness (why propagate-stability == full convergence): labels
+    * only ever decrease, stay within the vertex's own component, and
+    * label(v) <= v, so the component min m always keeps label(m) = m. If a
+    * propagate changes nothing, then nmin(v) >= label(v) for every v;
+    * walking any path m = x0 - x1 - ... - xk: nmin(x1) <= label(m) = m and
+    * label(x1) <= nmin(x1) give label(x1) = m, and inductively every label
+    * in the component equals m. Uniform root labels also make both jumps
+    * no-ops — nothing in a further batch could change any label. The loop
+    * tests only changed == 0: a retried task re-adds only its own count, so
+    * a non-zero total never becomes zero.
+    *
+    * Plan size (the plan-explosion gotcha): the logical plan is built,
+    * analyzed and optimized on the driver before the batch job can start,
+    * so its size is driver time no task overlaps. `propagate` reads its
+    * input ONCE — each joined (src, dst, label) row contributes (dst, label)
+    * to its neighbour and (src, label) to itself, then one min-fold per
+    * vertex — and only `jump`'s self-join reads its input twice. A batch
+    * is therefore 16 copies of the label scan and 261 analyzed logical
+    * nodes, planned in 0.2-0.3 s on a 4-vCPU box; a propagate that also
+    * re-read its input for a left join doubled the plan per operation to
+    * 128 copies and 1,384 nodes, planned in 0.55-1.4 s (CCConvergenceSpec
+    * bounds the count). The `sym` and label scans are checkpoints, so the
+    * plan stays this size in every batch.
+    */
+  private[graft] def batch(sym: DataFrame, labels: DataFrame): DataFrame = {
+    def contributions(d: DataFrame): DataFrame = sym
+      .join(d.select(col("vid").as("src"), col("label")), "src")
+      .select(explode(array(
+        struct(col("dst").as("vid"), col("label"), lit(false).as("self")),
+        struct(col("src").as("vid"), col("label"), lit(true).as("self")))).as("c"))
+      .select("c.*")
+    def propagate(d: DataFrame): DataFrame =
+      contributions(d).groupBy("vid").agg(min("label").as("label"))
+    // the probe's own min-fold is still applied — probe work is never thrown
+    // away; `prev` is the vertex's own contribution, i.e. its incoming label
+    def propagateProbe(d: DataFrame): DataFrame =
+      contributions(d).groupBy("vid")
+        .agg(min(when(col("self"), col("label"))).as("prev"), min("label").as("label"))
+    def jump(d: DataFrame): DataFrame = d
+      .join(d.select(col("vid").as("label"), col("label").as("ll")), Seq("label"), "left")
+      .select(col("vid"), least(col("label"), coalesce(col("ll"), col("label"))).as("label"))
+    def round(d: DataFrame): DataFrame = jump(jump(propagate(d)))
+    propagateProbe(round(round(labels)))
+      .observe(ProbeChanged, count_if(col("label") =!= col("prev")))
+  }
+
+  /** The count `name` observed by the job that materialized `df`. A missing
+    * observation throws: read as 0 it would declare the loop converged.
+    */
+  private def observed(df: DataFrame, name: String): Long =
+    df.queryExecution.observedMetrics.get(name) match {
+      case Some(row) => row.getLong(0)
+      case None => throw new IllegalStateException(
+        s"connectedComponents: the materializing job reported no '$name' observation")
+    }
 
   private def requireStringIds(df: DataFrame, what: String, cols: String*): Unit =
     cols.foreach { c =>
@@ -294,12 +320,7 @@ object Clustering {
     } finally pool.shutdown()
     try {
       val stacked = runs.map(_.get).map { case (tier, cc) =>
-        // surface non-convergence at this level, not just a stderr warning
-        // buried in connectedComponents — a split component is a RECALL bug
-        // the caller must see (round-2 ADVICE)
-        if (!cc.converged)
-          throw new IllegalStateException(s"tieredClusters: tier '$tier' did NOT " +
-            s"converge in ${cc.iterations} rounds — components may be returned split")
+        requireConverged(cc, s"tieredClusters: tier '$tier'")
         cc.labels.withColumn("tier", lit(tier))
       }.reduce(_.unionByName(_))
       Blocks.materialize(stacked)._1

@@ -109,7 +109,8 @@ object DedupPipeline {
     }
 
     // the CC labels are lazy over CC's own blocks: freed once the stage has
-    // materialized them (or failed)
+    // materialized them (or failed). Non-convergence is logged, then fails
+    // the stage: labels cut off at maxIter may split a component.
     var ccIters = -1
     var ccBlocks = Set.empty[Int]
     val clusters = try staged("clusters") {
@@ -119,6 +120,7 @@ object DedupPipeline {
       audit.foreach(_.log("cc_iterations", cc.iterations.toLong, 0L, committed = false,
         detail = s"label propagation ${if (cc.converged) "converged" else "DID NOT CONVERGE"}" +
           s" in ${cc.iterations} rounds"))
+      Clustering.requireConverged(cc, "DedupPipeline")
       cc.labels
     } finally Blocks.free(spark, ccBlocks)
 

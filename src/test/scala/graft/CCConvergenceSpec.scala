@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.Clustering
+import graft.pipeline.{Blocks, Clustering}
 
 /** Convergence semantics of the in-batch probe (Clustering.scala): a batch's
   * final propagate-probe declares convergence iff no label moved — sound
@@ -14,30 +14,56 @@ import graft.pipeline.Clustering
   *    multiple batches must run and the probe must NOT fire early);
   *  - a star + disjoint families (converges in one batch — the probe saves
   *    the old confirmation batch);
-  *  - empty edges (zero-batch exit).
+  *  - empty edges (zero-batch exit);
+  *  - a deep path cut off at maxIter (the probe must report labels still
+  *    moving, and the convergence check must fail).
   */
 class CCConvergenceSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   private def ids(n: Int): Seq[String] = (0 until n).map(i => f"v$i%04d")
 
-  private def runCC(vertexIds: Seq[String], edgePairs: Seq[(String, String)]) = {
+  private def runCC(vertexIds: Seq[String], edgePairs: Seq[(String, String)],
+                    maxIter: Int = 30) = {
     import spark.implicits._
     val verts = vertexIds.toDF("image_id")
     val edges = edgePairs.toDF("a", "b")
-    Clustering.connectedComponents(verts, edges)
+    Clustering.connectedComponents(verts, edges, maxIter)
   }
+
+  private def path(vs: Seq[String]) = vs.sliding(2).map(s => (s(0), s(1))).toSeq
 
   test("deep 300-vertex path: multiple batches, labels = global min") {
     val vs = ids(300)
-    val path = vs.sliding(2).map(s => (s(0), s(1))).toSeq
-    val cc = runCC(vs, path)
+    val cc = runCC(vs, path(vs))
     assert(cc.converged, "path graph must converge before maxIter")
     val labels = cc.labels.collect().map(r => r.getString(0) -> r.getString(1))
     assert(labels.length === 300)
     assert(labels.forall(_._2 == "v0000"),
       s"non-min labels: ${labels.filter(_._2 != "v0000").take(5).toSeq}")
     assert(cc.iterations > 3, "a 300-path cannot converge in a single batch")
+  }
+
+  test("deep 300-vertex path cut off at maxIter: not converged, and the check throws") {
+    val vs = ids(300)
+    val cc = runCC(vs, path(vs), maxIter = 3)
+    try {
+      assert(cc.iterations === 3)
+      assert(!cc.converged, "one batch cannot settle a 300-path: the probe must see labels move")
+      val e = intercept[IllegalStateException](Clustering.requireConverged(cc, "path"))
+      assert(e.getMessage.contains("path") && e.getMessage.contains("3 rounds"), e.getMessage)
+    } finally Blocks.free(spark, cc.blocks)
+  }
+
+  test("one batch's analyzed plan stays small (no per-operation doubling)") {
+    import spark.implicits._
+    val sym = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
+    val labels = Seq((0L, 0L), (1L, 1L)).toDF("vid", "label")
+    val plan = Clustering.batch(sym, labels).queryExecution.analyzed
+    val nodes = plan.collect { case n => n }.size
+    // 282 here; a propagate that re-read its input doubled the plan per
+    // operation, to 1,384 nodes in the pipeline's first batch
+    assert(nodes <= 400, s"batch plan has $nodes logical nodes")
   }
 
   test("star + disjoint pairs: one batch + in-batch probe confirms") {
