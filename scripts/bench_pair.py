@@ -10,8 +10,11 @@ Unpacks `git archive <rev>` into a temporary directory, then runs
 alternating which side goes first from one seed to the next. Prints every
 run, then for each end-to-end metric of BENCHMARK.json each side's median,
 min, quartiles and spread ((q3 - q1) / median, as perfbench/baseline.json
-defines it), and the number of seeds on which the working tree was better.
+defines it), the number of seeds on which the working tree was better, and
+a verdict against the metric's bound ("unresolved" when the base's own
+spread is wider than the bound).
 Each side builds into its own .bench_build/ before its first timed run.
+Both sides run for the `run_seconds` that BENCHMARK.json sets.
 """
 import argparse
 import json
@@ -41,11 +44,34 @@ def run_once(root, workload, seed, seconds):
     return json.loads(last)
 
 
-def summary(values):
+def quartiles(values):
     med = statistics.median(values)
     q1, _, q3 = statistics.quantiles(values, n=4) if len(values) > 1 else (med, med, med)
-    spread = (q3 - q1) / med if med else float("nan")
-    return f"median {med:.4g}  min {min(values):.4g}  q1 {q1:.4g}  q3 {q3:.4g}  spread {spread:.1%}"
+    return q1, med, q3
+
+
+def spread(values):
+    q1, med, q3 = quartiles(values)
+    return (q3 - q1) / med if med else float("nan")
+
+
+def summary(values):
+    q1, med, q3 = quartiles(values)
+    return (f"median {med:.4g}  min {min(values):.4g}  q1 {q1:.4g}  q3 {q3:.4g}  "
+            f"spread {spread(values):.1%}")
+
+
+def verdict(base, tree, better, bound):
+    """'unresolved' when the base's own spread is wider than the bound (the
+    runs cannot tell a regression of that size from noise) unless every tree
+    run is better than every base run, else whether the tree's median is
+    worse than the base's by more than the bound."""
+    sign = 1 if better == "lower" else -1
+    if not spread(base) <= bound:
+        every = max(sign * t for t in tree) < min(sign * b for b in base)
+        return "better on every run" if every else "unresolved"
+    worse = sign * (statistics.median(tree) / statistics.median(base) - 1)
+    return "beyond bound" if worse > bound else "within bound"
 
 
 def main():
@@ -53,12 +79,12 @@ def main():
     ap.add_argument("--rev", required=True, help="git revision to compare against")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", type=int, nargs="+", required=True)
-    ap.add_argument("--seconds", type=float, default=1)
     args = ap.parse_args()
 
     tree = os.getcwd()
     with open(os.path.join(tree, "BENCHMARK.json")) as fh:
-        metrics = json.load(fh)["end_to_end"]
+        bench = json.load(fh)
+    metrics, seconds = bench["end_to_end"], bench["run_seconds"]
     # a short name: sbt binds a unix socket under <dir>/.bench_build, and
     # socket paths are limited to about 100 bytes
     base_dir = tempfile.mkdtemp(prefix="bp-")
@@ -69,7 +95,7 @@ def main():
         for i, seed in enumerate(args.seeds):
             order = ["base", "tree"] if i % 2 == 0 else ["tree", "base"]
             for side in order:
-                res = run_once(sides[side], args.workload, seed, args.seconds)
+                res = run_once(sides[side], args.workload, seed, seconds)
                 results[side].append(res)
                 values = " ".join(f"{m['name']}={res['metrics'][m['name']]['value']:.4g}"
                                   for m in metrics)
@@ -94,7 +120,8 @@ def main():
         print(f"{name} ({m['unit']}, {m['better']} is better, bound {m['bound']}):")
         print(f"  base  {summary(base)}")
         print(f"  tree  {summary(tree_v)}")
-        print(f"  median change {change:+.1%}, tree better on {wins}/{len(base)} seeds")
+        print(f"  median change {change:+.1%}, tree better on {wins}/{len(base)} seeds, "
+              f"{verdict(base, tree_v, m['better'], m['bound'])}")
 
 
 if __name__ == "__main__":

@@ -223,13 +223,11 @@ object Clustering {
     * so its size is driver time no task overlaps. `propagate` reads its
     * input ONCE — each joined (src, dst, label) row contributes (dst, label)
     * to its neighbour and (src, label) to itself, then one min-fold per
-    * vertex — and only `jump`'s self-join reads its input twice. A batch
-    * is therefore 16 copies of the label scan and 261 analyzed logical
-    * nodes, planned in 0.2-0.3 s on a 4-vCPU box; a propagate that also
-    * re-read its input for a left join doubled the plan per operation to
-    * 128 copies and 1,384 nodes, planned in 0.55-1.4 s (CCConvergenceSpec
-    * bounds the count). The `sym` and label scans are checkpoints, so the
-    * plan stays this size in every batch.
+    * vertex — and only `jump`'s self-join reads its input twice, so the
+    * plan grows linearly in the batch's operations instead of doubling per
+    * operation (CCConvergenceSpec bounds its node count). The `sym` and
+    * label scans are checkpoints, so the plan stays this size in every
+    * batch.
     */
   private[graft] def batch(sym: DataFrame, labels: DataFrame): DataFrame = {
     def contributions(d: DataFrame): DataFrame = sym

@@ -61,8 +61,8 @@ class CCConvergenceSpec extends AnyFunSuite {
     val labels = Seq((0L, 0L), (1L, 1L)).toDF("vid", "label")
     val plan = Clustering.batch(sym, labels).queryExecution.analyzed
     val nodes = plan.collect { case n => n }.size
-    // 282 here; a propagate that re-read its input doubled the plan per
-    // operation, to 1,384 nodes in the pipeline's first batch
+    // linear in the batch's operations: only jump's self-join reads its
+    // input twice; a propagate that re-read its input would double it per operation
     assert(nodes <= 400, s"batch plan has $nodes logical nodes")
   }
 
